@@ -83,3 +83,17 @@ def test_every_registered_query_has_driver_evidence_or_window_slot():
         f"queries with neither a historical driver row nor a current window "
         f"slot: {uncovered}"
     )
+
+
+def test_reorder_rejects_unregistered_tail_priority_name(monkeypatch):
+    """A typo or a renamed query in TAIL_PRIORITY must fail at import, as it
+    does for DRIVER_WINDOW, instead of silently dropping out of the queue."""
+    import pytest
+
+    from the_movie_database_import_spark import plans
+
+    order = list(plans.REGISTRY)
+    monkeypatch.setattr(plans, "TAIL_PRIORITY", [*plans.TAIL_PRIORITY, "q_no_such_query"])
+    with pytest.raises(RuntimeError, match="TAIL_PRIORITY.*q_no_such_query"):
+        plans._reorder()
+    assert list(plans.REGISTRY) == order  # the guard runs before any reordering

@@ -4400,6 +4400,40 @@ def test_triangle_counts_random_graph_matches_brute_force(spark):
     assert got == expect, (len(got), len(expect))
 
 
+def test_triangle_counts_over_array_budget_matches_broadcast(spark, monkeypatch):
+    """The adjacency-array sides are budgeted by element volume: with the
+    budget forced to 0 both take the unhinted (shuffle) branch, and the
+    counts equal the broadcast branch's."""
+    import hashlib
+
+    from the_movie_database_import_spark import session
+    from the_movie_database_import_spark.operators.graph import triangle_counts
+
+    pairs = {
+        tuple(sorted((int(h[:4], 16) % 25, int(h[4:8], 16) % 25)))
+        for h in (hashlib.md5(f"tri-budget-{i}".encode()).hexdigest() for i in range(300))
+    }
+    edges = spark.createDataFrame(
+        sorted(p for p in pairs if p[0] != p[1]), "src long, dst long"
+    )
+    broadcast = {r.node: r.n_triangles for r in triangle_counts(edges).collect()}
+
+    inner = session.maybe_broadcast
+    array_sides = []
+
+    def spy(df, **kw):
+        out = inner(df, **kw)
+        if kw.get("budget_rows") == 0:
+            array_sides.append(out is df)  # True: left unhinted
+        return out
+
+    monkeypatch.setattr(session, "BROADCAST_BUDGET_ARRAY_ELEMS", 0)
+    monkeypatch.setattr(session, "maybe_broadcast", spy)
+    shuffled = {r.node: r.n_triangles for r in triangle_counts(edges).collect()}
+    assert array_sides == [True, True]
+    assert broadcast and shuffled == broadcast
+
+
 def test_cooccurrence_edges_bounded_and_symmetric(spark):
     """Directed co-occurrence emits both orientations with equal weight and
     collapses repeated (key, item) rows first; undirected emits the u < v

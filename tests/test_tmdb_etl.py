@@ -12,6 +12,7 @@ inside repr cells, multiline overview."""
 from __future__ import annotations
 
 import csv
+from collections import Counter
 
 import pytest
 
@@ -409,7 +410,7 @@ def test_cli_end_to_end(tmdb_dir, tmp_path, spark):
         assert spark.read.parquet(str(out / t)).columns
 
 
-def test_cli_jdbc_end_to_end_bootstraps_empty_database(spark, tmdb_dir, tmp_path):
+def test_cli_jdbc_end_to_end_bootstraps_empty_database(spark, tmdb_dir, tmp_path, capsys):
     """`--jdbc-url` against an EMPTY database must self-bootstrap the 15-table
     schema (engine DDL) and load it — the reference-user story: the reference
     drops/creates before every load (loader.py:81-91), so no manual DDL step
@@ -419,6 +420,7 @@ def test_cli_jdbc_end_to_end_bootstraps_empty_database(spark, tmdb_dir, tmp_path
     url = f"jdbc:derby:{tmp_path}/tmdb_cli;create=true"
     assert main([str(tmdb_dir), "--jdbc-url", url,
                  "--jdbc-driver", DERBY_DRIVER]) == 0
+    assert _printed_counts(capsys)["movies"] == 3  # observed in the JDBC write
     movies = (
         spark.read.format("jdbc").option("url", url)
         .option("dbtable", "movies").option("driver", DERBY_DRIVER).load()
@@ -433,6 +435,124 @@ def test_cli_jdbc_end_to_end_bootstraps_empty_database(spark, tmdb_dir, tmp_path
         .option("dbtable", "movies").option("driver", DERBY_DRIVER).load().count()
         == 3
     )
+
+
+def _printed_counts(capsys) -> dict[str, int]:
+    """The per-table row counts from the CLI's ``loaded N tables`` line."""
+    line = next(
+        ln for ln in capsys.readouterr().err.splitlines() if ln.startswith("loaded ")
+    )
+    return {k: int(v) for k, v in (kv.split("=") for kv in line.split(": ", 1)[1].split(", "))}
+
+
+def _multiset(rows) -> Counter:
+    """Rows as an order-insensitive multiset; array cells (collect_set
+    outputs) compare as sorted tuples."""
+
+    def cell(v):
+        return tuple(sorted(v)) if isinstance(v, list) else v
+
+    return Counter(tuple(sorted((k, cell(v)) for k, v in r.asDict().items())) for r in rows)
+
+
+def test_cli_counts_come_from_the_writes(spark, tmdb_dir, tmp_path, capsys, monkeypatch):
+    """The CLI prints each table's row count as observed by its write: the
+    numbers equal the written tables' row counts, and the CLI never counts
+    a DataFrame or re-reads its own output to get them."""
+    from pyspark.sql.classic.dataframe import DataFrame
+    from pyspark.sql.readwriter import DataFrameReader
+
+    from the_movie_database_import_spark.etl.__main__ import main
+
+    out = tmp_path / "out"
+    calls = []
+    with monkeypatch.context() as m:
+        count, parquet = DataFrame.count, DataFrameReader.parquet
+        m.setattr(DataFrame, "count", lambda self: calls.append("count") or count(self))
+        m.setattr(DataFrameReader, "parquet",
+                  lambda self, *a, **k: calls.append("read.parquet") or parquet(self, *a, **k))
+        assert main([str(tmdb_dir), "--out", str(out)]) == 0
+    assert calls == []
+    printed = _printed_counts(capsys)
+    assert set(printed) == {p.name for p in out.iterdir()}
+    assert len(printed) == 16
+    for name, n in printed.items():
+        assert spark.read.parquet(str(out / name)).count() == n, name
+
+
+def test_write_all_parquet_concurrent_output_matches_direct_collect(
+    spark, tmdb_dir, tables, tmp_path
+):
+    """All 16 tables written at once land exactly the rows each table
+    yields when collected on its own, and the returned counts match."""
+    from the_movie_database_import_spark.session import release_caches
+    from the_movie_database_import_spark.sources.writers import write_all_parquet
+
+    counts = write_all_parquet(build_all_tables(spark, tmdb_dir), str(tmp_path))
+    release_caches()
+    assert counts == {name: len(rows) for name, rows in tables.items()}
+    for name, rows in tables.items():
+        written = spark.read.parquet(str(tmp_path / name)).collect()
+        assert _multiset(written) == _multiset(rows), name
+
+
+def test_cli_write_failure_propagates_after_other_writes(
+    spark, tmdb_dir, tmp_path, monkeypatch
+):
+    """One table's write raising ends the CLI with that exception, but only
+    after every other write of the tier has finished; nothing hangs, and
+    the shared parse caches are released."""
+    import os
+    import threading
+
+    from the_movie_database_import_spark import session
+    from the_movie_database_import_spark.etl.__main__ import main
+    from the_movie_database_import_spark.etl.pipeline import OUTPUT_TABLES
+    from the_movie_database_import_spark.sources import writers
+
+    inner = writers.write_parquet_partitioned
+
+    def failing(df, path, **kw):
+        if os.path.basename(path) == "persons":
+            raise RuntimeError("injected persons write failure")
+        return inner(df, path, **kw)
+
+    monkeypatch.setattr(writers, "write_parquet_partitioned", failing)
+    out = tmp_path / "out"
+    raised = []
+
+    def run():
+        try:
+            main([str(tmdb_dir), "--out", str(out)])
+        except Exception as e:  # noqa: BLE001 — the test inspects it
+            raised.append(e)
+
+    t = threading.Thread(target=run, daemon=True)
+    t.start()
+    t.join(timeout=600)
+    assert not t.is_alive(), "the CLI hung after a failed write"
+    assert len(raised) == 1 and "injected persons" in str(raised[0])
+    finished = {p.name for p in out.iterdir() if (p / "_SUCCESS").exists()}
+    assert finished == {*OUTPUT_TABLES, "crew_by_job"} - {"persons"}
+    assert session._TRACKED_CACHES == []
+
+
+def test_jdbc_tiers_respect_foreign_keys():
+    """The JDBC load writes one tier at a time and a tier's tables at once,
+    so every FK target of a table must sit in an EARLIER tier; the tiers
+    cover the 15-table schema exactly once."""
+    from the_movie_database_import_spark.sources.schema import TABLES
+    from the_movie_database_import_spark.sources.writers import (
+        JDBC_WRITE_ORDER,
+        JDBC_WRITE_TIERS,
+    )
+
+    tier_of = {name: i for i, tier in enumerate(JDBC_WRITE_TIERS) for name in tier}
+    assert len(tier_of) == len(JDBC_WRITE_ORDER) == len(TABLES)
+    assert set(tier_of) == {t.name for t in TABLES}
+    for t in TABLES:
+        for col, ref in t.fks:
+            assert tier_of[ref] < tier_of[t.name], (t.name, col, ref)
 
 
 def test_db_config_json_reference_format(tmp_path):

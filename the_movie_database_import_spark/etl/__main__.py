@@ -89,7 +89,7 @@ def main(argv: list[str] | None = None) -> int:
     if not args.out and not args.jdbc_url:
         parser.error("need --out, --jdbc-url, or --config")
 
-    from ..session import get_spark
+    from ..session import get_spark, release_caches
     from ..sources.writers import (
         DEFAULT_BATCH_SIZE,
         write_all_jdbc,
@@ -100,37 +100,37 @@ def main(argv: list[str] | None = None) -> int:
     spark = get_spark("tmdb-etl")
     t0 = time.time()
     tables = build_all_tables(spark, base_dir=args.dataset_dir)
-    if args.out:
-        write_all_parquet(tables, args.out)
-    if args.jdbc_url:
-        props = dict(args.config_props or {})
-        if args.jdbc_driver:
-            props["driver"] = args.jdbc_driver
-        if not args.no_bootstrap:
-            from ..sources.schema import bootstrap_schema
+    # row counts come from the writes themselves (no table runs twice)
+    counts: dict[str, int] = {}
+    try:
+        if args.out:
+            counts.update(write_all_parquet(tables, args.out))
+        if args.jdbc_url:
+            props = dict(args.config_props or {})
+            if args.jdbc_driver:
+                props["driver"] = args.jdbc_driver
+            if not args.no_bootstrap:
+                from ..sources.schema import bootstrap_schema
 
-            # destructive by design (reference parity, loader.py:81-91);
-            # say so once — --no-bootstrap opts out
-            print(
-                f"note: dropping and recreating all 15 output tables on "
-                f"{args.jdbc_url} (pass --no-bootstrap to keep the schema)",
-                file=sys.stderr,
-            )
-            # same credential properties as the data writes — the DDL
-            # connection must authenticate too
-            bootstrap_schema(spark, args.jdbc_url, properties=props)
-        write_all_jdbc(
-            tables, args.jdbc_url,
-            batch_size=args.batch_size or DEFAULT_BATCH_SIZE,
-            properties=props or None,
-        )
-    counts = {name: spark.read.parquet(f"{args.out}/{name}").count() for name in tables} \
-        if args.out else {name: df.count() for name, df in tables.items()}
-    from ..session import release_caches
-
-    release_caches()  # all sinks written — drop the shared parse caches
+                # destructive by design (reference parity, loader.py:81-91);
+                # say so once — --no-bootstrap opts out
+                print(
+                    f"note: dropping and recreating all 15 output tables on "
+                    f"{args.jdbc_url} (pass --no-bootstrap to keep the schema)",
+                    file=sys.stderr,
+                )
+                # same credential properties as the data writes — the DDL
+                # connection must authenticate too
+                bootstrap_schema(spark, args.jdbc_url, properties=props)
+            counts.update(write_all_jdbc(
+                tables, args.jdbc_url,
+                batch_size=args.batch_size or DEFAULT_BATCH_SIZE,
+                properties=props or None,
+            ))
+    finally:
+        release_caches()  # all sinks written — drop the shared parse caches
     print(
-        f"loaded {len(tables)} tables in {time.time() - t0:.1f}s: "
+        f"loaded {len(counts)} tables in {time.time() - t0:.1f}s: "
         + ", ".join(f"{k}={v}" for k, v in sorted(counts.items())),
         file=sys.stderr,
     )

@@ -360,7 +360,7 @@ def triangle_counts(
     by the (b, c) pair — then an explode + count. All exact integers; the
     oracle is the plain three-way join over canonical edges.
     """
-    from ..session import maybe_broadcast, tracked_cache
+    from ..session import BROADCAST_BUDGET_ARRAY_ELEMS, maybe_broadcast, tracked_cache
 
     sc = edges.sparkSession.sparkContext
 
@@ -430,12 +430,15 @@ def triangle_counts(
         .groupBy("x")
         .agg(F.collect_set("y").alias("_adj"))
     )
+    # Array-carrying sides: budgeted by element volume. Each undirected
+    # edge is oriented once, so the _adj arrays hold exactly m elements.
     a_x = maybe_broadcast(
-        oadj.select(F.col("x"), F.col("_adj").alias("_ax")), n_rows=2 * m
+        oadj.select(F.col("x"), F.col("_adj").alias("_ax")),
+        n_rows=m, budget_rows=BROADCAST_BUDGET_ARRAY_ELEMS,
     )
     a_y = maybe_broadcast(
         oadj.select(F.col("x").alias("y"), F.col("_adj").alias("_ay")),
-        n_rows=2 * m,
+        n_rows=m, budget_rows=BROADCAST_BUDGET_ARRAY_ELEMS,
     )
     # Inner joins are exact here: an endpoint missing from oadj has no
     # out-edges, so its intersection is empty and the edge contributes

@@ -310,14 +310,14 @@ def _wrap_release(spec: QuerySpec) -> QuerySpec:
 
 
 def _reorder() -> None:
-    missing = [n for n in DRIVER_WINDOW if n not in REGISTRY]
-    if missing:
-        raise RuntimeError(f"DRIVER_WINDOW names not registered: {missing}")
+    for label, names in (("DRIVER_WINDOW", DRIVER_WINDOW), ("TAIL_PRIORITY", TAIL_PRIORITY)):
+        missing = [n for n in names if n not in REGISTRY]
+        if missing:
+            raise RuntimeError(f"{label} names not registered: {missing}")
     placed = set(DRIVER_WINDOW) | set(TAIL_PRIORITY)
     rest = [n for n in REGISTRY if n not in placed]
     ordered = {
-        n: _wrap_release(REGISTRY[n])
-        for n in [*DRIVER_WINDOW, *[t for t in TAIL_PRIORITY if t in REGISTRY], *rest]
+        n: _wrap_release(REGISTRY[n]) for n in [*DRIVER_WINDOW, *TAIL_PRIORITY, *rest]
     }
     REGISTRY.clear()
     REGISTRY.update(ordered)

@@ -5,23 +5,29 @@ under disabled FK triggers because it writes bridges before their dimension
 targets (`loader.py:339-353,:67-78,:597-605`). Here the write ORDER is fixed
 instead — dimensions before facts before bridges — so constraints can stay
 on (deviation D4), and batching maps to the JDBC writer's ``batchsize``.
+The tables of one tier have no FKs between them, so they load at the same
+time (``write_tables_tiered``).
 """
 
 from __future__ import annotations
 
+from concurrent.futures import ThreadPoolExecutor
 from contextlib import contextmanager
+from typing import Callable, Iterable
 
 from pyspark.sql import DataFrame, functions as F
 
-# FK-safe write order (contrast ref B3: bridges-before-dims under disabled
-# triggers): dims → fact → bridges.
-JDBC_WRITE_ORDER = (
-    "genres", "languages", "collections", "persons", "countries",
-    "production_companies", "keywords",
-    "movies",
-    "movies_genres", "spoken_languages", "production_countries",
-    "movies_production_companies", "movies_keywords", "directors", "actors",
+# FK-safe write tiers (contrast ref B3: bridges-before-dims under disabled
+# triggers): dims → fact → bridges. Every table's FK targets sit in an
+# earlier tier, so the tables of one tier can load at the same time.
+JDBC_WRITE_TIERS = (
+    ("genres", "languages", "collections", "persons", "countries",
+     "production_companies", "keywords"),
+    ("movies",),
+    ("movies_genres", "spoken_languages", "production_countries",
+     "movies_production_companies", "movies_keywords", "directors", "actors"),
 )
+JDBC_WRITE_ORDER = tuple(name for tier in JDBC_WRITE_TIERS for name in tier)
 
 DEFAULT_BATCH_SIZE = 50_000  # db_config.json:6
 
@@ -50,19 +56,65 @@ def write_jdbc(
     writer.save()
 
 
+def write_tables_tiered(
+    tables: dict[str, DataFrame],
+    tiers: Iterable[Iterable[str]],
+    write: Callable[[str, DataFrame], None],
+) -> dict[str, int]:
+    """Write ``tables`` tier by tier and return ``{table: rows written}``.
+
+    All tables of one tier are submitted at once, one pool thread each, and
+    Spark's scheduler shares the cores between their jobs; a tier starts
+    only when the previous one has finished. Tables that share a cached
+    parse are computed once: concurrent tasks for one cached block wait on
+    the block lock instead of recomputing it. Each write carries an
+    ``Observation`` row count, so the counts come from the writes
+    themselves and no table is executed a second time to count it.
+
+    ``write(name, df)`` performs one table's write. If a write raises, the
+    rest of its tier still runs to completion, later tiers are skipped, and
+    the first failure (in tier order) is re-raised."""
+    from pyspark.sql import Observation
+    from pyspark.util import inheritable_thread_target
+
+    counts: dict[str, int] = {}
+    for tier in tiers:
+        names = [n for n in tier if n in tables]
+        if not names:
+            continue
+        observations = {n: Observation() for n in names}
+        with ThreadPoolExecutor(max_workers=len(names)) as pool:
+            futures = [
+                # each write gets its own copy of this thread's job
+                # properties (group, description, tags); a shared copy
+                # would carry one SQL execution id across threads
+                pool.submit(
+                    inheritable_thread_target(tables[n].sparkSession)(write), n,
+                    tables[n].observe(observations[n], F.count(F.lit(1)).alias("rows")),
+                )
+                for n in names
+            ]
+        for future in futures:  # the pool has drained: every write is done
+            future.result()
+        counts.update({n: observations[n].get["rows"] for n in names})
+    return counts
+
+
 def write_all_jdbc(
     tables: dict[str, DataFrame],
     url: str,
     *,
     batch_size: int = DEFAULT_BATCH_SIZE,
     properties: dict[str, str] | None = None,
-) -> None:
-    """Write the full table set in FK-safe order (ref A18/A19 replacement)."""
-    for name in JDBC_WRITE_ORDER:
-        if name in tables:
-            write_jdbc(
-                tables[name], url, name, batch_size=batch_size, properties=properties
-            )
+) -> dict[str, int]:
+    """Write the full table set tier by tier in FK-safe order (ref A18/A19
+    replacement); returns ``{table: rows written}``."""
+    return write_tables_tiered(
+        tables, JDBC_WRITE_TIERS,
+        lambda name, df: write_jdbc(
+            df, url, name, batch_size=batch_size, properties=properties
+        ),
+    )
 
 
 def write_jdbc_exactly_once(
@@ -226,9 +278,13 @@ def write_parquet_partitioned(
     writer.parquet(path)
 
 
-def write_all_parquet(tables: dict[str, DataFrame], base_path: str) -> None:
-    for name, df in tables.items():
-        write_parquet_partitioned(df, f"{base_path}/{name}")
+def write_all_parquet(tables: dict[str, DataFrame], base_path: str) -> dict[str, int]:
+    """Write every table to ``{base_path}/{name}`` at once (parquet has no
+    FKs: one tier); returns ``{table: rows written}``."""
+    return write_tables_tiered(
+        tables, [list(tables)],
+        lambda name, df: write_parquet_partitioned(df, f"{base_path}/{name}"),
+    )
 
 
 def write_bucketed(

@@ -3,10 +3,12 @@
 
 Generates a synthetic Kaggle-shaped dataset (movies_metadata / credits /
 keywords / ratings CSVs with Python-repr nested cells) and times the full
-4-CSV → 15-table build. The reference (`/root/reference/loader.py`) processes
-the real dataset (~45k movies, ~26M ratings) one row at a time in pure
-Python; this pipeline reads the same shapes through Spark CSV scans,
-Arrow-batched literal_eval parsing, and relational derivations.
+4-CSV → 15-table build and its parquet writes, through the same
+``write_all_parquet`` path the ETL CLI runs. The reference
+(`loader.py`) processes the real dataset (~45k movies, ~26M ratings) one
+row at a time in pure Python; this pipeline reads the same shapes through
+Spark CSV scans, Arrow-batched literal_eval parsing, and relational
+derivations.
 
 Usage:
     python tools/bench_etl.py [--movies 45000] [--ratings 5000000] [--shards N]
@@ -38,6 +40,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from the_movie_database_import_spark.etl.pipeline import build_all_tables  # noqa: E402
 from the_movie_database_import_spark.session import get_spark  # noqa: E402
+from the_movie_database_import_spark.sources.writers import write_all_parquet  # noqa: E402
 
 GENRES = [(i, f"Genre {i}") for i in range(16, 36)]
 LANGS = ["en", "fr", "de", "es", "it", "ja", "ko", "zh", "pt", "ru", "hi", "sv"]
@@ -193,16 +196,9 @@ def main() -> None:
 
     out_dir = os.path.join(base, "out")
     t0 = time.perf_counter()
-    tables = build_all_tables(spark, base)
-    for name, df in tables.items():
-        df.write.mode("overwrite").parquet(os.path.join(out_dir, name))
+    # the CLI's build + write path; row counts come from the writes
+    counts = write_all_parquet(build_all_tables(spark, base), out_dir)
     build_s = round(time.perf_counter() - t0, 2)
-    # Row counts from the written outputs (parquet footer metadata — cheap,
-    # and not double-charged to the timed build).
-    counts = {
-        name: spark.read.parquet(os.path.join(out_dir, name)).count()
-        for name in tables
-    }
 
     print(
         json.dumps(

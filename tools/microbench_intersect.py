@@ -6,15 +6,22 @@ Materializes the REAL candidate-pair stream of q_dedup_minhash_lsh at
 sf0.1 (the banded self-join's output projection inputs: both sides' token
 hash arrays), localCheckpoints it so every formulation reads the same
 physical rows, then times each intersection formulation into the noop
-sink (median of 3 after warmup). All formulations must return the same
-total intersection count (asserted) — they are candidates for a
-result-identical swap, not approximations.
+sink (median of 3 after warmup). Every formulation the run times must
+return the same total intersection count (asserted) — they are candidates
+for a result-identical swap, not approximations.
 
-Usage: python tools/microbench_intersect.py [sf_dir]
+The two sorted-merge formulations built from higher-order functions
+(``n_mergesort_agg``, ``n_mergesort_zip``) are interpreted per element, with
+no codegen (recorded at 21 s and 4.6 s at sf0.1); they are timed and
+equality-checked only with ``--include-hof``.
+
+Usage: python tools/microbench_intersect.py [sf_dir] [--include-hof]
+       (sf_dir defaults to $SPARK_GRAFT_SF_DIR)
 """
 
 from __future__ import annotations
 
+import argparse
 import os
 import statistics
 import sys
@@ -24,10 +31,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import DataFrame, functions as F
 
-SF_DIR = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
-
-
-def candidates(spark) -> DataFrame:
+def candidates(spark, sf_dir: str) -> DataFrame:
     """The verify stage's input: every in-bucket candidate pair with both
     token-hash arrays, exactly as minhash_lsh_pairs enumerates them
     (first-collision-band, size-compatible, rep-collapsed)."""
@@ -45,7 +49,7 @@ def candidates(spark) -> DataFrame:
     threshold = 0.8
     num_hashes, bands = choose_minhash_params(threshold, 0.95)
     rows_per_band = num_hashes // bands
-    docs = fan_out(load_table(spark, SF_DIR, "documents"))
+    docs = fan_out(load_table(spark, sf_dir, "documents"))
     toksets = docs.select(
         F.col("doc_id"), distinct_tokens(F.col("text")).alias("toks")
     ).select("doc_id", _token_hashes(F.col("toks")).alias("th"))
@@ -153,11 +157,20 @@ def n_distinct_concat(c: DataFrame) -> DataFrame:
 def main() -> None:
     from the_movie_database_import_spark.session import get_spark
 
+    ap = argparse.ArgumentParser()
+    ap.add_argument("sf_dir", nargs="?", default=os.environ.get("SPARK_GRAFT_SF_DIR"),
+                    help="an sf0.1 tier directory (default $SPARK_GRAFT_SF_DIR)")
+    ap.add_argument("--include-hof", action="store_true",
+                    help="also time and check the two sorted-merge HOF forms")
+    args = ap.parse_args()
+    if not args.sf_dir:
+        ap.error("give sf_dir or set SPARK_GRAFT_SF_DIR")
+
     spark = get_spark("microbench-intersect")
     spark.sparkContext.setLogLevel("ERROR")
     # repartition BEFORE the checkpoint: the join output AQE-coalesces to a
     # single partition at sf0.1, which would serialize every timed pass
-    cand = candidates(spark).repartition(32).localCheckpoint(eager=True)
+    cand = candidates(spark, args.sf_dir).repartition(32).localCheckpoint(eager=True)
     n_pairs = cand.count()
     stats = cand.select(
         F.avg(F.size("ta")).alias("avg_len"), F.max(F.size("ta")).alias("max_len")
@@ -165,9 +178,8 @@ def main() -> None:
     print(f"pairs={n_pairs}  avg|th|={stats['avg_len']:.1f}  max|th|={stats['max_len']}")
 
     # order alternates sorted/unsorted to rule out warmup-order artifacts;
-    # the catastrophic HOF formulations (mergesort_agg 21 s, mergesort_zip
-    # 4.6 s — interpreted per-element lambdas, no codegen) are dropped from
-    # the timing loop after the first recorded run.
+    # the HOF formulations (recorded at mergesort_agg 21 s, mergesort_zip
+    # 4.6 s) run only on request
     forms = {
         "hashset_sorted": n_hashset_sorted,
         "hashset_unsorted(baseline)": n_hashset_unsorted,
@@ -175,6 +187,8 @@ def main() -> None:
         "hashset_unsorted_2": n_hashset_unsorted,
         "distinct_concat": n_distinct_concat,
     }
+    if args.include_hof:
+        forms.update(mergesort_agg=n_mergesort_agg, mergesort_zip=n_mergesort_zip)
     totals = {}
     for name, fn in forms.items():
         totals[name] = fn(cand).agg(F.sum("n")).first()[0]
