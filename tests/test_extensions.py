@@ -4400,11 +4400,13 @@ def test_triangle_counts_random_graph_matches_brute_force(spark):
     assert got == expect, (len(got), len(expect))
 
 
-def test_triangle_counts_over_array_budget_matches_broadcast(spark, monkeypatch):
-    """The adjacency-array sides are budgeted by element volume: with the
-    budget forced to 0 both take the unhinted (shuffle) branch, and the
-    counts equal the broadcast branch's."""
+def test_triangle_counts_array_budget_threshold(spark, monkeypatch):
+    """The adjacency-array sides are budgeted as 2*m (m elements plus at
+    most m row keys) against the element budget: at a budget of exactly 2*m
+    both sides broadcast, one below it both stay unhinted (shuffle), and
+    either branch gives the brute-force triangle counts."""
     import hashlib
+    from itertools import combinations
 
     from the_movie_database_import_spark import session
     from the_movie_database_import_spark.operators.graph import triangle_counts
@@ -4413,25 +4415,39 @@ def test_triangle_counts_over_array_budget_matches_broadcast(spark, monkeypatch)
         tuple(sorted((int(h[:4], 16) % 25, int(h[4:8], 16) % 25)))
         for h in (hashlib.md5(f"tri-budget-{i}".encode()).hexdigest() for i in range(300))
     }
-    edges = spark.createDataFrame(
-        sorted(p for p in pairs if p[0] != p[1]), "src long, dst long"
-    )
-    broadcast = {r.node: r.n_triangles for r in triangle_counts(edges).collect()}
+    canon = sorted(p for p in pairs if p[0] != p[1])
+    m = len(canon)
+    adj = {}
+    for u, v in canon:
+        adj.setdefault(u, set()).add(v)
+        adj.setdefault(v, set()).add(u)
+    expect = {}
+    for a, b, c in combinations(sorted(adj), 3):
+        if b in adj[a] and c in adj[a] and c in adj[b]:
+            for node in (a, b, c):
+                expect[node] = expect.get(node, 0) + 1
+    edges = spark.createDataFrame(canon, "src long, dst long")
 
     inner = session.maybe_broadcast
-    array_sides = []
+    for budget, hinted in ((2 * m, True), (2 * m - 1, False)):
+        array_sides = []
 
-    def spy(df, **kw):
-        out = inner(df, **kw)
-        if kw.get("budget_rows") == 0:
-            array_sides.append(out is df)  # True: left unhinted
-        return out
+        def spy(df, **kw):
+            out = inner(df, **kw)
+            if kw.get("budget_rows") == budget:
+                array_sides.append((kw["n_rows"], out is not df))
+            return out
 
-    monkeypatch.setattr(session, "BROADCAST_BUDGET_ARRAY_ELEMS", 0)
-    monkeypatch.setattr(session, "maybe_broadcast", spy)
-    shuffled = {r.node: r.n_triangles for r in triangle_counts(edges).collect()}
-    assert array_sides == [True, True]
-    assert broadcast and shuffled == broadcast
+        with monkeypatch.context() as mp:
+            mp.setattr(session, "BROADCAST_BUDGET_ARRAY_ELEMS", budget)
+            mp.setattr(session, "maybe_broadcast", spy)
+            got = {
+                r.node: r.n_triangles
+                for r in triangle_counts(edges).collect()
+                if r.n_triangles
+            }
+        assert array_sides == [(2 * m, hinted)] * 2, budget
+        assert expect and got == expect, budget
 
 
 def test_cooccurrence_edges_bounded_and_symmetric(spark):

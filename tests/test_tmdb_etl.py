@@ -496,6 +496,27 @@ def test_write_all_parquet_concurrent_output_matches_direct_collect(
         assert _multiset(written) == _multiset(rows), name
 
 
+def test_tiered_writer_without_pinned_threads(spark, monkeypatch):
+    """With pinned-thread mode off (PYSPARK_PIN_THREAD=false),
+    ``inheritable_thread_target`` hands back its argument unchanged; the
+    writer must still get a callable for every write, and the counts."""
+    import pyspark.util
+
+    from the_movie_database_import_spark.sources.writers import write_tables_tiered
+
+    monkeypatch.setattr(pyspark.util, "inheritable_thread_target", lambda f=None: f)
+    written = []
+
+    def write(name, df):
+        df.write.format("noop").mode("overwrite").save()
+        written.append(name)
+
+    tables = {"a": spark.range(3), "b": spark.range(5), "c": spark.range(0)}
+    counts = write_tables_tiered(tables, [("a", "b"), ("c",)], write)
+    assert counts == {"a": 3, "b": 5, "c": 0}
+    assert sorted(written) == ["a", "b", "c"]
+
+
 def test_cli_write_failure_propagates_after_other_writes(
     spark, tmdb_dir, tmp_path, monkeypatch
 ):

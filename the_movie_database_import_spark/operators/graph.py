@@ -431,14 +431,15 @@ def triangle_counts(
         .agg(F.collect_set("y").alias("_adj"))
     )
     # Array-carrying sides: budgeted by element volume. Each undirected
-    # edge is oriented once, so the _adj arrays hold exactly m elements.
+    # edge is oriented once, so the _adj arrays hold exactly m elements in
+    # at most m rows (none is empty); 2*m bounds elements plus row keys.
     a_x = maybe_broadcast(
         oadj.select(F.col("x"), F.col("_adj").alias("_ax")),
-        n_rows=m, budget_rows=BROADCAST_BUDGET_ARRAY_ELEMS,
+        n_rows=2 * m, budget_rows=BROADCAST_BUDGET_ARRAY_ELEMS,
     )
     a_y = maybe_broadcast(
         oadj.select(F.col("x").alias("y"), F.col("_adj").alias("_ay")),
-        n_rows=m, budget_rows=BROADCAST_BUDGET_ARRAY_ELEMS,
+        n_rows=2 * m, budget_rows=BROADCAST_BUDGET_ARRAY_ELEMS,
     )
     # Inner joins are exact here: an endpoint missing from oadj has no
     # out-edges, so its intersection is empty and the edge contributes

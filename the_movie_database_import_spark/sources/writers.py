@@ -11,6 +11,7 @@ time (``write_tables_tiered``).
 
 from __future__ import annotations
 
+import warnings
 from concurrent.futures import ThreadPoolExecutor
 from contextlib import contextmanager
 from typing import Callable, Iterable
@@ -75,7 +76,6 @@ def write_tables_tiered(
     rest of its tier still runs to completion, later tiers are skipped, and
     the first failure (in tier order) is re-raised."""
     from pyspark.sql import Observation
-    from pyspark.util import inheritable_thread_target
 
     counts: dict[str, int] = {}
     for tier in tiers:
@@ -83,13 +83,14 @@ def write_tables_tiered(
         if not names:
             continue
         observations = {n: Observation() for n in names}
+        # each write gets its own copy of this thread's job properties
+        # (group, description); a shared copy would carry one SQL
+        # execution id across threads. Wrapped before any write starts.
+        targets = {n: _inheritable(write) for n in names}
         with ThreadPoolExecutor(max_workers=len(names)) as pool:
             futures = [
-                # each write gets its own copy of this thread's job
-                # properties (group, description, tags); a shared copy
-                # would carry one SQL execution id across threads
                 pool.submit(
-                    inheritable_thread_target(tables[n].sparkSession)(write), n,
+                    targets[n], n,
                     tables[n].observe(observations[n], F.count(F.lit(1)).alias("rows")),
                 )
                 for n in names
@@ -98,6 +99,18 @@ def write_tables_tiered(
             future.result()
         counts.update({n: observations[n].get["rows"] for n in names})
     return counts
+
+
+def _inheritable(f: Callable) -> Callable:
+    """``inheritable_thread_target`` on the callable itself: with
+    pinned-thread mode off it returns ``f`` as is (given the session it
+    would return the session). Its warning that session tags are not
+    inherited is silenced because this package sets no tags."""
+    from pyspark.util import inheritable_thread_target
+
+    with warnings.catch_warnings():
+        warnings.filterwarnings("ignore", "Spark session is not provided")
+        return inheritable_thread_target(f)
 
 
 def write_all_jdbc(

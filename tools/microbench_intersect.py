@@ -10,18 +10,16 @@ sink (median of 3 after warmup). Every formulation the run times must
 return the same total intersection count (asserted) — they are candidates
 for a result-identical swap, not approximations.
 
-The two sorted-merge formulations built from higher-order functions
-(``n_mergesort_agg``, ``n_mergesort_zip``) are interpreted per element, with
-no codegen (recorded at 21 s and 4.6 s at sf0.1); they are timed and
-equality-checked only with ``--include-hof``.
+The sorted-merge formulations built from higher-order functions
+(``aggregate`` fold and ``zip_with`` over ``array_sort(concat)``) were
+measured 13-59x slower and rejected. Their timings are in
+OPTIMIZATION_r14.md (VERDICT #3); the tool no longer carries them.
 
-Usage: python tools/microbench_intersect.py [sf_dir] [--include-hof]
-       (sf_dir defaults to $SPARK_GRAFT_SF_DIR)
+Usage: python tools/microbench_intersect.py [sf_dir]
 """
 
 from __future__ import annotations
 
-import argparse
 import os
 import statistics
 import sys
@@ -31,7 +29,10 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import DataFrame, functions as F
 
-def candidates(spark, sf_dir: str) -> DataFrame:
+SF_DIR = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
+
+
+def candidates(spark) -> DataFrame:
     """The verify stage's input: every in-bucket candidate pair with both
     token-hash arrays, exactly as minhash_lsh_pairs enumerates them
     (first-collision-band, size-compatible, rep-collapsed)."""
@@ -49,7 +50,7 @@ def candidates(spark, sf_dir: str) -> DataFrame:
     threshold = 0.8
     num_hashes, bands = choose_minhash_params(threshold, 0.95)
     rows_per_band = num_hashes // bands
-    docs = fan_out(load_table(spark, sf_dir, "documents"))
+    docs = fan_out(load_table(spark, SF_DIR, "documents"))
     toksets = docs.select(
         F.col("doc_id"), distinct_tokens(F.col("text")).alias("toks")
     ).select("doc_id", _token_hashes(F.col("toks")).alias("th"))
@@ -113,37 +114,6 @@ def n_hashset_sorted(c: DataFrame) -> DataFrame:
     return c.select(F.size(F.array_intersect("sa", "sb")).alias("n"))
 
 
-def n_mergesort_agg(c: DataFrame) -> DataFrame:
-    """Sorted-merge: concat two sorted runs, array_sort (adaptive merge),
-    count adjacent duplicates with a fold. Elements within each side are
-    distinct, so each common value appears exactly twice in the merge."""
-    merged = F.array_sort(F.concat("sa", "sb"))
-    acc0 = F.struct(
-        F.lit(None).cast("bigint").alias("prev"), F.lit(0).cast("int").alias("c")
-    )
-    folded = F.aggregate(
-        merged,
-        acc0,
-        lambda acc, x: F.struct(
-            x.alias("prev"),
-            (acc["c"] + F.when(x == acc["prev"], 1).otherwise(0)).alias("c"),
-        ),
-        lambda acc: acc["c"],
-    )
-    return c.select(folded.alias("n"))
-
-
-def n_mergesort_zip(c: DataFrame) -> DataFrame:
-    """Sorted-merge via slices: adjacent-equal flags from two shifted
-    slices of the merged array, then count the trues."""
-    merged = F.array_sort(F.concat("sa", "sb"))
-    k = F.size(merged)
-    eq = F.zip_with(
-        F.slice(merged, 1, k - 1), F.slice(merged, 2, k - 1), lambda x, y: x == y
-    )
-    return c.select(F.size(F.filter(eq, lambda b: b)).alias("n"))
-
-
 def n_distinct_concat(c: DataFrame) -> DataFrame:
     """|A| + |B| - |A ∪ B| with the union via array_distinct (hash set over
     n+m instead of per-pair intersect set)."""
@@ -157,29 +127,18 @@ def n_distinct_concat(c: DataFrame) -> DataFrame:
 def main() -> None:
     from the_movie_database_import_spark.session import get_spark
 
-    ap = argparse.ArgumentParser()
-    ap.add_argument("sf_dir", nargs="?", default=os.environ.get("SPARK_GRAFT_SF_DIR"),
-                    help="an sf0.1 tier directory (default $SPARK_GRAFT_SF_DIR)")
-    ap.add_argument("--include-hof", action="store_true",
-                    help="also time and check the two sorted-merge HOF forms")
-    args = ap.parse_args()
-    if not args.sf_dir:
-        ap.error("give sf_dir or set SPARK_GRAFT_SF_DIR")
-
     spark = get_spark("microbench-intersect")
     spark.sparkContext.setLogLevel("ERROR")
     # repartition BEFORE the checkpoint: the join output AQE-coalesces to a
     # single partition at sf0.1, which would serialize every timed pass
-    cand = candidates(spark, args.sf_dir).repartition(32).localCheckpoint(eager=True)
+    cand = candidates(spark).repartition(32).localCheckpoint(eager=True)
     n_pairs = cand.count()
     stats = cand.select(
         F.avg(F.size("ta")).alias("avg_len"), F.max(F.size("ta")).alias("max_len")
     ).first()
     print(f"pairs={n_pairs}  avg|th|={stats['avg_len']:.1f}  max|th|={stats['max_len']}")
 
-    # order alternates sorted/unsorted to rule out warmup-order artifacts;
-    # the HOF formulations (recorded at mergesort_agg 21 s, mergesort_zip
-    # 4.6 s) run only on request
+    # order alternates sorted/unsorted to rule out warmup-order artifacts
     forms = {
         "hashset_sorted": n_hashset_sorted,
         "hashset_unsorted(baseline)": n_hashset_unsorted,
@@ -187,8 +146,6 @@ def main() -> None:
         "hashset_unsorted_2": n_hashset_unsorted,
         "distinct_concat": n_distinct_concat,
     }
-    if args.include_hof:
-        forms.update(mergesort_agg=n_mergesort_agg, mergesort_zip=n_mergesort_zip)
     totals = {}
     for name, fn in forms.items():
         totals[name] = fn(cand).agg(F.sum("n")).first()[0]
