@@ -95,6 +95,33 @@ def test_tracked_caches_released_on_next_query(spark):
     )
 
 
+def test_codegen_cache_keeps_classes_across_many_shapes(spark):
+    """A warm session must reuse a plan's generated classes after running
+    more distinct shapes than Spark's default 100-entry codegen cache
+    holds. Each shape below inlines its own literal, so it compiles 2 new
+    classes: 60 of them evict the first shape's classes from a 100-entry
+    LRU, and re-running it recompiles them."""
+    from the_movie_database_import_spark.session import CODEGEN_CACHE_ENTRIES
+
+    assert spark.conf.get("spark.sql.codegen.cache.maxEntries") == str(
+        CODEGEN_CACHE_ENTRIES
+    )
+    compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics \
+        .METRIC_COMPILATION_TIME()
+
+    def run(i: int) -> None:
+        spark.range(4).select(F.col("id") * 3 + i).collect()
+
+    run(-1)
+    first = compiles.getCount()
+    for i in range(60):
+        run(i)
+    assert compiles.getCount() - first > 100, "the shapes must overflow 100 entries"
+    before = compiles.getCount()
+    run(-1)
+    assert compiles.getCount() == before, "the first shape was recompiled"
+
+
 def test_corpus_curation_single_shuffle_no_python(spark):
     """The composed curation pipeline (quality score -> lang filter ->
     canonical dedup flag) must stay one fused scan-side projection plus

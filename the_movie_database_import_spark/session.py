@@ -15,6 +15,16 @@ from pyspark.sql import DataFrame, SparkSession
 
 DEFAULT_APP_NAME = "the-movie-database-import-spark"
 
+# Entries in Spark's generated-class cache (``spark.sql.codegen.cache.maxEntries``,
+# default 100, LRU). The cache must hold the classes a session cycles
+# through, or every re-run of a plan recompiles all of them in Janino and
+# runs them interpreted until the JIT warms up again. Measured working set
+# (CodegenMetrics): 2412 distinct classes for one sweep of the full
+# registry at sf0.01, plus ~217 for the TMDB ETL; the dedup/graph mix alone
+# needs ~160 per pass. 4096 holds both with headroom, for ~18 MB more
+# metaspace after a full registry sweep (248 vs 230 MB).
+CODEGEN_CACHE_ENTRIES = 4096
+
 # Caches created by engine operators (minhash collapse, ETL parse reuse, ...).
 # A long-lived session (the external harness's, a notebook's) would otherwise
 # accumulate executor storage across queries — tracked caches are released
@@ -215,9 +225,17 @@ def _package_zip_path() -> str:
 def get_spark(app_name: str = DEFAULT_APP_NAME) -> SparkSession:
     """Create (or reuse) a tuned SparkSession.
 
-    Shuffle partitions default to the local core count; on a cluster this
-    should be ~2-3x total executor cores (or left to AQE coalescing from a
-    high initial value).
+    Shuffle partitions default to the local core count, but never fewer
+    than 8; on a cluster this should be ~2-3x total executor cores (or left
+    to AQE coalescing from a high initial value).
+
+    The codegen cache size (:data:`CODEGEN_CACHE_ENTRIES`) is set here on
+    the builder, not in :func:`configure_session`: it is a static SQL conf,
+    so ``spark.conf.set`` raises ``CANNOT_MODIFY_STATIC_CONFIG`` on it.
+    Spark reads it once per JVM, when the first class is generated, and
+    sizes one process-wide cache from it; ``getOrCreate()`` on a session
+    that already exists keeps the size that session started with. Going
+    through SparkConf also ships it to cluster executors.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     builder = (
@@ -233,6 +251,7 @@ def get_spark(app_name: str = DEFAULT_APP_NAME) -> SparkSession:
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "12g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
     )
     # NOTE (r13, measured): Spark 4.1's PythonWorkerFactory reaps ALL idle
     # Python workers after a HARD-CODED 1 minute (IDLE_WORKER_TIMEOUT_NS —
@@ -263,6 +282,11 @@ def configure_session(spark: SparkSession) -> SparkSession:
       (pandas_udf / mapInPandas) deserialize even when the driver process
       wasn't launched from the repo directory — the same mechanism that
       deploys the package to a real cluster.
+
+    Static confs cannot be applied here. A session created elsewhere (the
+    driver harness's, or ``tools/exact_parity.py``'s vanilla mode) keeps
+    Spark's 100-entry codegen cache, so a long sweep in it recompiles the
+    generated classes of every query it re-runs; see :func:`get_spark`.
     """
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")

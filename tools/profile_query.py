@@ -4,7 +4,11 @@ Runs the query once untimed (warmup: codegen/footer caches), then once
 timed, and dumps every stage the timed run created: stage name (the first
 line of its details / description), executor CPU seconds, task wall
 seconds, task count, shuffle read/write bytes. This pinpoints WHERE a
-query's CPU goes — bench.py's per-query totals say only how much.
+query's CPU goes — bench.py's per-query totals say only how much. The
+header line also carries the timed run's codegen compiles (classes Janino
+compiled, from CodegenMetrics) and their total compile time: a warm run
+that still compiles many classes is paying Janino and interpreted
+execution that the stage table does not show.
 
 Usage: python tools/profile_query.py q_dedup_minhash_lsh [sf_dir]
 """
@@ -61,6 +65,16 @@ def max_stage_id(sc) -> int:
     return m
 
 
+def codegen_totals(sc) -> tuple[int, float]:
+    """(classes compiled, total compile ms) so far in this JVM."""
+    jvm = sc._jvm
+    count = jvm.org.apache.spark.metrics.source.CodegenMetrics \
+        .METRIC_COMPILATION_TIME().getCount()
+    ns = jvm.org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator \
+        .compileTime()
+    return int(count), ns / 1e6
+
+
 def main() -> None:
     name = sys.argv[1]
     sf_dir = sys.argv[2] if len(sys.argv) > 2 else os.environ.get(
@@ -83,14 +97,18 @@ def main() -> None:
     run()  # warmup
     release_caches()
     floor = max_stage_id(sc) + 1
+    compiles0, compile_ms0 = codegen_totals(sc)
     t0 = time.perf_counter()
     t_build = run()
     wall = time.perf_counter() - t0
+    compiles1, compile_ms1 = codegen_totals(sc)
     rows = stage_rows(sc, floor)
     print(f"\n{name} @ {sf_dir}")
     print(f"wall={wall:.3f}s  plan_build={t_build:.3f}s  "
           f"stages={len(rows)}  tasks={sum(r['tasks'] for r in rows)}  "
-          f"cpu={sum(r['cpu_s'] for r in rows):.2f}s")
+          f"cpu={sum(r['cpu_s'] for r in rows):.2f}s  "
+          f"codegen_compiles={compiles1 - compiles0}  "
+          f"compile_ms={compile_ms1 - compile_ms0:.1f}")
     print(f"{'id':>5} {'cpu_s':>8} {'run_s':>8} {'tasks':>6} "
           f"{'shR_MB':>8} {'shW_MB':>8}  name")
     for r in rows:
